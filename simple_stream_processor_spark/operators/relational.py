@@ -114,18 +114,6 @@ def set_intersect(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.intersect(b)
 
 
-def set_except(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.exceptAll(b).distinct() if False else a.subtract(b)  # subtract == EXCEPT DISTINCT
-
-
-def rank_window(df: DataFrame, partition: Sequence[str], order: Sequence[Column]) -> Column:
-    """Ranking window spec (N7). Partition-local sort after one hash
-    exchange; no global sort. Callers attach row_number/rank/lag over it."""
-    from pyspark.sql import Window
-
-    return Window.partitionBy(*partition).orderBy(*order)
-
-
 def asof_join(
     left: DataFrame,
     right: DataFrame,

@@ -68,10 +68,6 @@ def tumbling_window(df: DataFrame, ts_col: str, size: str) -> Column:
     return F.window(F.col(ts_col), size)
 
 
-def sliding_window(df: DataFrame, ts_col: str, size: str, slide: str) -> Column:
-    return F.window(F.col(ts_col), size, slide)
-
-
 def watermark_cadence(df: DataFrame, order_col: str, ts_col: str, emit_every_n: int) -> DataFrame:
     """Batch emulation of per-N-record watermark emission + late-drop policy
     (reference Node.scala:289-313 and 326-331).

@@ -664,8 +664,8 @@ def q_streaming_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
-        from simple_stream_processor_spark.streaming.runner import audit_record
+        from simple_stream_processor_spark.streaming.runner import audit_record, await_drain
+        await_drain(q, 120)
         audit_record(q)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved)
@@ -1405,8 +1405,8 @@ def dsir_score_stream(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
-        from simple_stream_processor_spark.streaming.runner import audit_record
+        from simple_stream_processor_spark.streaming.runner import audit_record, await_drain
+        await_drain(q, 120)
         audit_record(q)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved)

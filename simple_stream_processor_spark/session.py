@@ -11,6 +11,31 @@ Cluster-scale rationale (100 TB notes):
   JVM<->Python in columnar Arrow batches, not pickled rows.
 - Session timezone pinned to UTC so event-time semantics are stable across
   driver/executor locales (and match the DuckDB oracle).
+
+Per-micro-batch fixed cost (local checkpoints and a local file source):
+- ``spark.sql.streaming.checkpointFileManagerClass`` =
+  ``FileSystemBasedCheckpointFileManager``. pyspark 4.1 bundles Hadoop 3.4
+  without ``libhadoop``, so the default FileContext-based manager's rename on
+  ``file:`` paths calls ``FileUtil.readLink``, which forks a ``readlink``
+  process for each file and again for its ``.crc``. Measured with logging
+  wrappers on ``PATH``: one 15 s open-loop run (45 micro-batches) forked
+  3 981 ``readlink`` and 1 007 ``chmod`` processes, ~110 per batch, all from
+  offset, commit and state-store checkpoint writes. The FileSystem-based
+  manager renames with ``rename(2)``, which is atomic on a local filesystem,
+  and still writes and verifies Hadoop's ``.crc`` files and the state
+  store's ``.delta.crc`` sidecars.
+- ``spark.sql.sources.parallelPartitionDiscovery.threshold`` raised from 32
+  to 1024: a file-source glob that expands to more than 32 directories
+  otherwise schedules a Spark listing job (one task per directory) on every
+  trigger; under the threshold the driver lists them itself. Together the
+  two settings took the open-loop stream benchmark's median latency from
+  883 ms to 286 ms (10 alternating runs each, 4 vCPUs); the traced state
+  commit per trigger fell from 306 ms to 14 ms, and each micro-batch runs
+  one Spark job.
+- A cluster deployment whose checkpoints live on HDFS or an object store
+  keeps Spark's default manager and threshold: the FileContext rename is
+  what makes an HDFS commit atomic, and listing thousands of remote
+  directories is worth a distributed job.
 """
 
 from __future__ import annotations
@@ -20,6 +45,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# file-source paths the driver lists itself before Spark runs a listing job
+LISTING_THRESHOLD = 1024
 
 
 def get_spark(app_name: str = "simple_stream_processor_spark", cpus: str | None = None) -> SparkSession:
@@ -53,6 +80,13 @@ def get_spark(app_name: str = "simple_stream_processor_spark", cpus: str | None 
             "spark.scheduler.allocation.file",
             os.path.join(os.path.dirname(os.path.abspath(__file__)), "conf", "fairscheduler.xml"),
         )
+        # see the module docstring: per-micro-batch fixed costs on local paths
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(LISTING_THRESHOLD))
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -10,7 +10,12 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from simple_stream_processor_spark.streaming.runner import TMP_ROOT, run_stream_to_memory, stream_events
+from simple_stream_processor_spark.streaming.runner import (
+    TMP_ROOT,
+    await_drain,
+    run_stream_to_memory,
+    stream_events,
+)
 from simple_stream_processor_spark.streaming.windows import (
     streaming_count_window,
     streaming_tumbling_window,
@@ -326,6 +331,123 @@ def test_run_stream_to_memory_restores_shuffle_partitions(spark, sf_dir):
         assert spark.conf.get("spark.sql.shuffle.partitions") == "57"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved)
+
+
+def _mem_views(spark) -> set:
+    return {t.name for t in spark.catalog.listTables() if t.name.startswith("mem_")}
+
+
+def test_drain_timeout_raises_and_leaves_no_active_stream(spark, sf_dir):
+    """A drain that outlives its timeout must fail loudly, never hand back
+    a truncated result, and must not leave its query running or its
+    memory-sink view behind."""
+    views = _mem_views(spark)
+    sdf = stream_events(spark, sf_dir, max_files_per_trigger=1).groupBy("event_type").count()
+    with pytest.raises(TimeoutError, match="did not finish"):
+        run_stream_to_memory(sdf, output_mode="complete", timeout_s=0.001)
+    assert spark.streams.active == []
+    assert _mem_views(spark) == views
+
+
+def test_foreach_batch_drain_timeout_raises_and_stops(spark, sf_dir):
+    """The foreachBatch drains (q_streaming_merge_upsert, the live DSIR
+    scorer) wait through ``await_drain``: on timeout the query is stopped
+    and the caller gets a TimeoutError instead of partial state."""
+    from simple_stream_processor_spark.streaming.runner import _tmpdir
+
+    q = (
+        stream_events(spark, sf_dir).writeStream.foreachBatch(lambda df, i: None)
+        .option("checkpointLocation", _tmpdir("chk"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(TimeoutError):
+        await_drain(q, 0.001)
+    assert not q.isActive
+    assert spark.streams.active == []
+
+
+def _start_glob_query(spark, root):
+    """Start a stateful aggregate over the glob ``root/src/*`` into a memory
+    sink on two state partitions, checkpointed at ``root/chk``."""
+    sdf = spark.readStream.schema("k string, id long").parquet(os.path.join(root, "src", "*"))
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "2")
+    try:
+        return (
+            sdf.groupBy("k").count().writeStream.format("memory")
+            .queryName("glob_" + uuid.uuid4().hex[:10])
+            .outputMode("complete")
+            .option("checkpointLocation", os.path.join(root, "chk"))
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+
+
+def _drain_dir_glob(spark, root, n_dirs=40):
+    """Write ``n_dirs`` one-file directories under ``root/src``, drain the
+    glob query over them and check its result; return the query."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for i in range(n_dirs):
+        d = os.path.join(root, "src", f"d{i:02d}")
+        os.makedirs(d)
+        pq.write_table(pa.table({"k": [f"k{i % 3}"], "id": [i]}), os.path.join(d, "part-0.parquet"))
+    q = _start_glob_query(spark, root)
+    await_drain(q, 120)
+    got = sorted(tuple(r) for r in spark.table(q.name).collect())
+    spark.catalog.dropTempView(q.name)
+    assert got == [("k0", 14), ("k1", 13), ("k2", 13)]
+    return q
+
+
+def test_glob_over_many_directories_runs_no_listing_job(spark, tmp_path):
+    """A source glob over 40 directories (above Spark's default parallel
+    listing threshold of 32) is listed on the driver: the query's run
+    group holds one job per micro-batch, each with its scan and state
+    stages, and no one-stage listing job with a task per directory."""
+    q = _drain_dir_glob(spark, str(tmp_path))
+    batches = [p for p in q.recentProgress if p.numInputRows > 0]
+    assert len(batches) == 1 and batches[0].numInputRows == 40
+    st = spark.sparkContext.statusTracker()
+    jobs = [st.getJobInfo(j) for j in st.getJobIdsForGroup(str(q.runId))]
+    assert [len(j.stageIds) for j in jobs] == [2] * len(batches)
+
+
+def test_checkpoint_keeps_checksums_after_stateful_commit(spark, tmp_path):
+    """The local checkpoint manager still writes every integrity sidecar:
+    Hadoop's ``.N.crc`` beside the offset and commit logs, and the state
+    store's ``N.delta.crc`` beside each partition's delta; and a damaged
+    offset log fails the restart instead of being read."""
+    root = str(tmp_path)
+    _drain_dir_glob(spark, root)
+    chk = os.path.join(root, "chk")
+    for log in ("offsets", "commits"):
+        assert os.path.isfile(os.path.join(chk, log, "0"))
+        assert os.path.isfile(os.path.join(chk, log, ".0.crc"))
+    parts = sorted(p for p in os.listdir(os.path.join(chk, "state", "0")) if p.isdigit())
+    assert parts == ["0", "1"]
+    for p in parts:
+        d = os.path.join(chk, "state", "0", p)
+        assert os.path.isfile(os.path.join(d, "1.delta"))
+        assert os.path.isfile(os.path.join(d, "1.delta.crc"))
+
+    off = os.path.join(chk, "offsets", "0")
+    with open(off, "rb") as f:
+        body = bytearray(f.read())
+    body[-2] ^= 0x01  # same length, different bytes: only the checksum can tell
+    with open(off, "wb") as f:
+        f.write(body)
+    q = _start_glob_query(spark, root)
+    try:
+        with pytest.raises(Exception, match="(?i)checksum"):
+            q.awaitTermination(120)
+    finally:
+        q.stop()
+        spark.catalog.dropTempView(q.name)
 
 
 def test_boundary_queue_depth_bounded_by_admission(spark):
